@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+A verifier runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``oracle_sql()[name]`` via DuckDB (row count + schema + order-insensitive
+values).
 
 All queries and their oracle twins live in the package registry
 (``parallel_mapreduce_spark/registry.py``); this module is a thin adapter.
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from parallel_mapreduce_spark.registry import oracle_map, query_map  # noqa: E402
+from parallel_mapreduce_spark.registry import QUERIES, _load_all  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,10 +32,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return query_map()
+    """One entry per implemented operator from SURVEY.md §2, in registration
+    order."""
+    _load_all()
+    return {name: spec.fn for name, spec in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle twins; queries absent here get the rows-only check."""
-    return oracle_map()
+    _load_all()
+    return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle}

@@ -15,7 +15,7 @@ SURVEY.md), rebuilt Spark-first:
   with its DuckDB oracle SQL, which is the correctness contract.
 """
 
-from parallel_mapreduce_spark.registry import QUERIES, oracle_map, query_map  # noqa: F401
+from parallel_mapreduce_spark.registry import QUERIES  # noqa: F401
 from parallel_mapreduce_spark.session import get_spark  # noqa: F401
 
-__all__ = ["QUERIES", "get_spark", "oracle_map", "query_map"]
+__all__ = ["QUERIES", "get_spark"]

@@ -316,7 +316,6 @@ def within_group_pairs(
     JOIN sz sb ON doc_b = sb.doc_id
     WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= {JACCARD_THRESHOLD}
     """,
-    headline=True,
 )
 def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -383,7 +382,6 @@ SHINGLE_FREQ_CAP = 100
     JOIN sz sb ON doc_b = sb.doc_id
     WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= {JACCARD_THRESHOLD}
     """,
-    headline=True,  # bench the 100 TB-safe capped plan alongside the exact one
 )
 def neardup_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -584,7 +582,6 @@ _SQL_MINHASH_BAND_CTES = f"""t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM docum
      AND a.doc_id < b.doc_id
     GROUP BY 1, 2
     """,
-    headline=True,
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate near-dup pairs with the number of matching LSH bands.
@@ -1257,7 +1254,6 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "fuzzy_name_pairs",
-    headline=True,
     oracle="""
     WITH snn AS (SELECT DISTINCT s_name FROM supplier)
     SELECT a.s_name AS name_a, b.s_name AS name_b
@@ -1636,7 +1632,6 @@ def _segdedup_working(docs: DataFrame) -> DataFrame:
 
 @query(
     "segment_dedup_reassemble",
-    headline=True,  # the corpus-rewriting dedup stage: bench the full pass
     oracle=f"""
     WITH working AS (
       SELECT doc_id, text FROM documents
@@ -2094,7 +2089,6 @@ def _substr_run_rows(working: DataFrame) -> DataFrame:
 
 @query(
     "exact_substring_runs",
-    headline=True,  # the long-repeat dedup ship plan: bench the full pass
     oracle=f"""
     WITH {_SQL_SUBSTR_RUNS_CTES}
     SELECT doc_a, doc_b,
@@ -2229,7 +2223,6 @@ def _substr_removal_kept(working: DataFrame) -> DataFrame:
 
 @query(
     "substring_run_removal",
-    headline=True,  # the corpus-rewriting long-repeat stage: bench it
     oracle=f"""
     WITH {_SQL_SUBSTR_RUNS_CTES},
     iv AS (

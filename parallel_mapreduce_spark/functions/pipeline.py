@@ -99,7 +99,6 @@ _SHINGLES = (
     FROM s LEFT JOIN dropped d USING (doc_id)
     WHERE d.doc_id IS NULL
     """,
-    headline=True,
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept documents (doc_id, lang, n_tokens) after the full cleaning chain."""
@@ -169,7 +168,6 @@ PACK_CAP = 512
 # --------------------------------------------------------------------------
 @query(
     "pipeline_training_mix",
-    headline=True,
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang, {_TOKS} AS toks FROM documents
@@ -335,7 +333,6 @@ def _rag_queries_sql() -> str:
 
 @query(
     "pipeline_chunk_index_search",
-    headline=True,
     oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     n AS (SELECT doc_id, toks, len(toks) AS n_tok FROM t WHERE len(toks) > 0),

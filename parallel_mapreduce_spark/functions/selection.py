@@ -48,10 +48,7 @@ from parallel_mapreduce_spark.functions.similarity import (
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist
 from parallel_mapreduce_spark.sources import load_table, register_views
-from parallel_mapreduce_spark.sources.tables import (
-    _local_cut_max_bytes,
-    table_bytes,
-)
+from parallel_mapreduce_spark.sources.tables import LOCAL_CUT_MAX_BYTES, table_bytes
 
 KC_K = 12  # selected coreset size (k centers, seed included)
 
@@ -70,7 +67,7 @@ def _md_cut(md, sf_dir: str):
     committed persist stands — corpus-scale blocks stay evictable and
     recomputable, and a durable checkpoint per pick would write the
     corpus K times."""
-    if table_bytes(sf_dir, "embeddings") <= _local_cut_max_bytes():
+    if table_bytes(sf_dir, "embeddings") <= LOCAL_CUT_MAX_BYTES:
         return md.localCheckpoint(eager=False)
     return bounded_persist(md)
 
@@ -124,7 +121,7 @@ def _dist6_to(center_vec: list[float]):
     )
 
 
-@query("kcenter_coreset_select", headline=True, oracle=_kc_oracle())
+@query("kcenter_coreset_select", oracle=_kc_oracle())
 def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sel_rank, center_id, radius): the Gonzalez farthest-point
     trajectory over the embedding corpus — which vectors a

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table, register_views, table_bytes
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -84,7 +84,7 @@ def _cosine_topk_oracle(src: str = "embeddings") -> str:
     """
 
 
-@query("cosine_topk", oracle=_cosine_topk_oracle(), headline=True)
+@query("cosine_topk", oracle=_cosine_topk_oracle())
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cosine_topk_frame(spark, sf_dir)
 
@@ -871,7 +871,7 @@ def _sq_topk_oracle(src: str = "embeddings") -> str:
     """
 
 
-@query("ann_sq_topk", headline=True, oracle=_sq_topk_oracle())
+@query("ann_sq_topk", oracle=_sq_topk_oracle())
 def ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sq_topk_frame(spark, sf_dir)
 
@@ -1243,7 +1243,6 @@ def _kmeans_cents_row(long: DataFrame) -> DataFrame:
 
 @query(
     "kmeans_lloyd_2iter",
-    headline=True,
     oracle=f"""
     WITH v AS (
       SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -1431,7 +1430,6 @@ SEMDEDUP_THRESHOLD = EMB_DEDUP_THRESHOLD  # same calibrated corpus threshold
 
 @query(
     "semdedup_cluster_report",
-    headline=True,
     oracle=f"""
     WITH v AS (
       SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -2377,7 +2375,6 @@ def _ivfpq_ranked(
 
 @query(
     "ann_ivfpq_topk",
-    headline=True,  # the composed ANN ship plan: bench the full pass
     oracle=_ivfpq_oracle(),
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3798,7 +3795,6 @@ def _knn_snap_gc(root: str, keep_dir: str) -> None:
     builder's leftovers — live builds finish in minutes)."""
     import time
 
-    keep = int(os.environ.get("SPARK_GRAFT_INDEX_KEEP", _KNN_SNAP_KEEP))
     try:
         entries = os.listdir(root)
     except OSError:
@@ -3820,7 +3816,7 @@ def _knn_snap_gc(root: str, keep_dir: str) -> None:
         if name.startswith(("knn_", "knntruth_")) and p != keep_dir:
             aged.append((mt, p))
     aged.sort(reverse=True)
-    for _, p in aged[max(keep - 1, 0):]:
+    for _, p in aged[max(_KNN_SNAP_KEEP - 1, 0):]:
         shutil.rmtree(p, ignore_errors=True)
 
 
@@ -4383,7 +4379,6 @@ def _knn_oracle_ctes_mapped(where: str, shard_map: str) -> str:
 
 @query(
     "knn_graph_nn_descent",
-    headline=True,
     oracle=f"""
     WITH {_knn_oracle_ctes()}
     SELECT node, rk, nbr, cos6 + 0.0 AS cosine
@@ -5512,44 +5507,23 @@ GS_ROUNDS = 3   # graph hops after the LSH entry
 # fit a broadcast is a property of the CORPUS, not the query — below the
 # gate the hop joins go broadcast-hash (zero exchanges per score call,
 # measured 8.8->5.6s alone); above it the shuffled-hash plan that
-# survived the 30x probe is kept verbatim. Both knobs are parameterised
-# for clusters (env) with local defaults derived from the data itself.
-GS_BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_GS_BCAST_MAX_BYTES", str(64 << 20))
-)
+# survived the 30x probe is kept verbatim.
+GS_BCAST_MAX_BYTES = 64 << 20
 GS_PARTS_ROWS = 10_000  # target visited rows per serving partition
 # Round-14 (verdict items): the QUERY-side broadcasts are gated on the
 # actual batch size, not assumed small. GS_QBCAST_MAX bounds the entry
-# query-bucket broadcast (rows ~ Q x tables — ~10-20 MB framed at the
-# default); GS_VIS_BCAST_ROWS bounds broadcasting the visited frame into
+# query-bucket broadcast (rows ~ Q x tables — ~10-20 MB framed at this
+# bound); GS_VIS_BCAST_ROWS bounds broadcasting the visited frame into
 # the per-hop anti-join (rows ~ Q x GS_BEAM x 3K thin (node, nbr) pairs).
 # A serving batch above either gate falls back to the shuffled plan.
-GS_QBCAST_MAX = int(os.environ.get("SPARK_GRAFT_GS_QBCAST_MAX", "100000"))
-GS_VIS_BCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_GS_VIS_BCAST_ROWS", "1000000")
-)
+GS_QBCAST_MAX = 100_000
+GS_VIS_BCAST_ROWS = 1_000_000
 
 
 def _gs_vis_bcast(n_queries: int) -> bool:
     """May the per-hop visited anti-join build side broadcast? Estimated
     from the same Q-budget bound _gs_parts uses."""
     return max(1, n_queries) * GS_BEAM * 3 * KNN_K <= GS_VIS_BCAST_ROWS
-
-
-def _knn_table_bytes(sf_dir: str, table: str = "embeddings") -> int:
-    """On-disk bytes of a source table (file or directory of parts) —
-    the broadcast-vs-shuffle decision input. Unknown => huge (shuffle)."""
-    p = os.path.join(sf_dir.rstrip("/"), f"{table}.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
-    except OSError:
-        return 1 << 62
 
 
 def corpus_parts(
@@ -5564,7 +5538,7 @@ def corpus_parts(
     clamped to [8, parallelism]. A 17 MB test corpus stops paying
     32-task stages to move kilobytes; a 100 TB corpus still saturates
     the cluster (the clamp ceiling is the cores)."""
-    b = _knn_table_bytes(sf_dir, table)
+    b = table_bytes(sf_dir, table)
     return max(
         8,
         min(
@@ -5577,11 +5551,11 @@ def corpus_parts(
 def _gs_small(sf_dir: str) -> bool:
     """True when the embedding corpus is small enough that the serving
     joins' corpus-scale sides (vecs, undirected adjacency) fit a
-    broadcast: parquet bytes under GS_BCAST_MAX_BYTES (~64 MiB default
-    covers both sides comfortably inside the executor/driver budget;
-    the adjacency is 2*K thin rows per vector, always smaller than the
-    vectors themselves)."""
-    return _knn_table_bytes(sf_dir) <= GS_BCAST_MAX_BYTES
+    broadcast: parquet bytes under GS_BCAST_MAX_BYTES (64 MiB covers both
+    sides comfortably inside the executor/driver budget; the adjacency is
+    2*K thin rows per vector, always smaller than the vectors
+    themselves)."""
+    return table_bytes(sf_dir, "embeddings") <= GS_BCAST_MAX_BYTES
 
 
 def _gs_parts(spark: SparkSession, n_queries: int) -> int:
@@ -5589,9 +5563,6 @@ def _gs_parts(spark: SparkSession, n_queries: int) -> int:
     visited set tops out near Q * GS_BEAM * 3K rows, so size partitions
     to GS_PARTS_ROWS of those thin rows, clamped to [8, parallelism].
     A million-query serving batch scales back up to full parallelism."""
-    env = os.environ.get("SPARK_GRAFT_GS_PARTS")
-    if env:
-        return int(env)
     est = max(1, n_queries) * GS_BEAM * 3 * KNN_K
     return max(
         8,
@@ -5921,7 +5892,6 @@ def _gs_und_sql(edges: str) -> str:
 
 @query(
     "ann_graph_search_topk",
-    headline=True,
     oracle=f"""
     WITH {_knn_oracle_ctes()}{_gs_oracle_ctes()}
     SELECT node AS q_id, CAST(rk AS BIGINT) AS rk, nbr AS c_id,
@@ -6341,7 +6311,6 @@ def _flt_allowed_sql() -> str:
 
 @query(
     "ann_filtered_topk",
-    headline=True,
     oracle=f"""
     WITH {_ivf_scored_ctes()},
     {_flt_allowed_sql()}
@@ -7144,7 +7113,6 @@ def _gs_del_oracle_ctes() -> str:
 
 @query(
     "ann_graph_delete_serve",
-    headline=True,
     oracle=f"""
     WITH {_knn_oracle_ctes()}{_gs_del_oracle_ctes()}{
         _gs_oracle_ctes(tag="gda")}

@@ -94,7 +94,6 @@ _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
     FROM (SELECT unnest({_SQL_TOKS}) AS word FROM documents)
     GROUP BY word
     """,
-    headline=True,
 )
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT word, COUNT(*) FROM tokens GROUP BY word.
@@ -185,7 +184,6 @@ def distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cnt DESC, word
     LIMIT 20
     """,
-    headline=True,
 )
 def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -2311,7 +2309,7 @@ def _bpe_oracle(rounds: int = BPE_ROUNDS) -> str:
     return "WITH " + ",\n".join(cte) + "\n" + "\nUNION ALL\n".join(sel)
 
 
-@query("bpe_train_3merges", headline=True, oracle=_bpe_oracle())
+@query("bpe_train_3merges", oracle=_bpe_oracle())
 def bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per training round: (round, pair, pair_count,
     symbols_after) — the learned merge, its frequency-weighted count, and

@@ -594,7 +594,6 @@ def boilerplate_coverage(
                > {BOILERPLATE_FLAG_RATIO} AS flagged
     FROM tot LEFT JOIN nb USING (doc_id)
     """,
-    headline=True,
 )
 def boilerplate_shingle_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -1080,7 +1079,6 @@ CHUNK_STRIDE = 96  # 32-token overlap between consecutive chunks
 # --------------------------------------------------------------------------
 @query(
     "chunk_documents",
-    headline=True,
     oracle=f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
     n AS (SELECT doc_id, toks, len(toks) AS n_tok FROM t WHERE len(toks) > 0),
@@ -1266,7 +1264,6 @@ EPOCH_TAG = "epoch0"
 
 @query(
     "epoch_shuffle_order",
-    headline=True,
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
@@ -1388,7 +1385,6 @@ STRIP_TOP_K_DF = 5
 
 @query(
     "strip_boilerplate_tokens",
-    headline=True,
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS word
@@ -1471,7 +1467,6 @@ def strip_boilerplate_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "bigram_logprob_score",
-    headline=True,
     oracle=f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
     bg AS (
@@ -2107,7 +2102,6 @@ def _lrq_step(feat: DataFrame, wrow: DataFrame) -> DataFrame:
 
 @query(
     "quality_classifier_lr2",
-    headline=True,
     oracle=f"""
     WITH f AS ({_LRQ_FEAT_SQL}),
     w0 AS (SELECT 0.0 AS b, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),

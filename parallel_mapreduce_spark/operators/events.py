@@ -45,7 +45,6 @@ SESSION_GAP_US = SESSION_GAP_S * 1_000_000
     FROM events
     GROUP BY 1, 2
     """,
-    headline=True,
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -954,7 +953,6 @@ PR_ITERS = 3
 
 @query(
     "pagerank_event_types",
-    headline=True,
     oracle=f"""
     WITH seq AS (
       SELECT event_type AS src,

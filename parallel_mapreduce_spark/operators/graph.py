@@ -93,7 +93,7 @@ def _pagerank_oracle(iters: int = PR_ITERS) -> str:
     return "".join(parts)
 
 
-@query("pagerank_trade_graph", headline=True, oracle=_pagerank_oracle())
+@query("pagerank_trade_graph", oracle=_pagerank_oracle())
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the nation trade graph, {PR_ITERS} exact
     integer power-iteration rounds (damping 0.85, uniform dangling-mass

@@ -79,7 +79,6 @@ def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '{_SHIP_CUTOFF}'
     GROUP BY l_returnflag, l_linestatus
     """,
-    headline=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -153,7 +152,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_orderkey
     LIMIT 10
     """,
-    headline=True,
 )
 def q3_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -200,7 +198,6 @@ def q3_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate < TIMESTAMP '2000-01-01 00:00:00'
     GROUP BY n_name
     """,
-    headline=True,
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -400,7 +397,6 @@ def range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM orders)
     WHERE rk <= 3
     """,
-    headline=True,
 )
 def window_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
@@ -1019,7 +1015,6 @@ Q18_MIN_QTY = 150
     JOIN orders ON o_orderkey = l_orderkey
     JOIN customer ON c_custkey = o_custkey
     """,
-    headline=True,
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)

@@ -105,7 +105,6 @@ def asof_join(
            CAST(date_diff('second', r.ts, l.ts) AS BIGINT) AS gap_s
     FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
     """,
-    headline=True,
 )
 def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)

@@ -437,7 +437,6 @@ Q21_LATE_DAYS = 60
 # --------------------------------------------------------------------------
 @query(
     "q21_waiting_suppliers_shape",
-    headline=True,
     oracle=f"""
     WITH lo AS (
       SELECT l.l_orderkey, l.l_suppkey,

@@ -119,6 +119,32 @@ def ensure_checkpoint_dir(spark: SparkSession) -> None:
 
 
 _SHIPPED: set[str] = set()
+_PKG_ZIP: str | None = None
+_PKG_ZIP_LOCK = threading.Lock()
+
+
+def _package_zip() -> str:
+    """Zip this package once per process into a fresh mkdtemp directory,
+    removed at interpreter exit. The directory is private to this process,
+    so a zip another process left behind can never be shipped in place of
+    this process's code."""
+    global _PKG_ZIP
+    with _PKG_ZIP_LOCK:
+        if _PKG_ZIP is None:
+            import atexit
+            import shutil
+            import tempfile
+
+            root = tempfile.mkdtemp(prefix="pmr_spark_pkg_")
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            pkg_dir = os.path.dirname(os.path.abspath(__file__))
+            _PKG_ZIP = shutil.make_archive(
+                os.path.join(root, "pmr_spark_pkg"),
+                "zip",
+                root_dir=os.path.dirname(pkg_dir),
+                base_dir=os.path.basename(pkg_dir),
+            )
+        return _PKG_ZIP
 
 
 def ensure_package_on_workers(sc) -> None:
@@ -126,26 +152,14 @@ def ensure_package_on_workers(sc) -> None:
 
     Worker processes unpickle functions defined in this package by module
     reference; unless the package is on their import path, any RDD closure or
-    Pandas UDF from here fails with ModuleNotFoundError. Zipping the package
-    once per SparkContext makes the engine self-contained no matter how the
-    calling session was created (driver harness, tests, bench).
+    Pandas UDF from here fails with ModuleNotFoundError. Adding the package
+    zip once per SparkContext makes the engine self-contained no matter how
+    the calling session was created (external harness, tests, benchmark).
     """
-    import shutil
-    import tempfile
-
     app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    stem = os.path.join(tempfile.gettempdir(), f"pmr_spark_pkg_{os.getpid()}")
-    if not os.path.exists(stem + ".zip"):
-        shutil.make_archive(
-            stem,
-            "zip",
-            root_dir=os.path.dirname(pkg_dir),
-            base_dir=os.path.basename(pkg_dir),
-        )
-    sc.addPyFile(stem + ".zip")
+    sc.addPyFile(_package_zip())
     _SHIPPED.add(app_id)
 
 

@@ -133,12 +133,7 @@ def read_json(
 # the cut goes through the reliable checkpoint directory instead. NOTE the
 # in-memory expansion multiple: decompressed row data runs ~4-8x the
 # parquet bytes, so 192 MiB on disk is of order 1 GiB pinned.
-def _local_cut_max_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_LOCAL_CKPT_MAX_BYTES", str(192 << 20))
-    )
+LOCAL_CUT_MAX_BYTES = 192 << 20
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
@@ -174,7 +169,7 @@ def corpus_cut(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFram
 
     Values are identical either way; only materialization strategy moves.
     """
-    if table_bytes(sf_dir, table) <= _local_cut_max_bytes():
+    if table_bytes(sf_dir, table) <= LOCAL_CUT_MAX_BYTES:
         # Lazy: consumers share ONE RDD, so upstream shuffle stages dedup
         # by shuffle id inside the first action (no per-consumer replans)
         # and the blocks cache for everything after — without the eager

@@ -137,7 +137,6 @@ def ann_serve_stream_run(
 
 @query(
     "stream_ann_serve_topk",
-    headline=True,
     oracle=f"""
     WITH {sim._knn_oracle_ctes()}{sim._gs_oracle_ctes()}
     SELECT node AS q_id, CAST(rk AS BIGINT) AS rk, nbr AS c_id,

@@ -1,7 +1,6 @@
 """Capture .explain("formatted") for named queries into a directory.
 
-Usage: PYTHONPATH=<repo> python capture_plans.py <repo_dir> <out_dir> <suffix> <sf_dir> [names...]
-Defaults to every headline query when no names given.
+Usage: PYTHONPATH=<repo> python capture_plans.py <repo_dir> <out_dir> <suffix> <sf_dir> <name> [names...]
 """
 import contextlib
 import io
@@ -9,16 +8,16 @@ import os
 import sys
 import time
 
+if len(sys.argv) < 6:
+    sys.exit(__doc__)
 repo, out_dir, suffix, sf_dir = sys.argv[1:5]
 names = sys.argv[5:]
 sys.path.insert(0, repo)
 
-from parallel_mapreduce_spark.registry import QUERIES, _load_all, headline_names  # noqa: E402
+from parallel_mapreduce_spark.registry import QUERIES, _load_all  # noqa: E402
 from parallel_mapreduce_spark.session import get_spark  # noqa: E402
 
 _load_all()
-if not names:
-    names = headline_names()
 spark = get_spark("capture-plans")
 os.makedirs(out_dir, exist_ok=True)
 

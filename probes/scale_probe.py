@@ -4,7 +4,7 @@ The sf-scaled oracle gate proves correctness; this probe measures how the
 six dedup/ANN headline plans' wall time GROWS with corpus size — the
 quantity that decides whether a plan survives a 100x scale-up. It builds
 mutated-replica corpora at 1x/3x/10x of sf0.1 under /tmp, times each query
-at each scale (best of N noop-write runs, same convention as bench.py),
+at each scale (best of N noop-write runs),
 and fits the exponent b in  t ~ scale^b  by least squares over log-log.
 
 Two replication modes, because they measure different things:

@@ -395,8 +395,8 @@ def test_corpus_cut_gates_on_table_bytes(spark, sf_dir, monkeypatch):
     checkpoint above it — and an unknown table reads as huge, so the gate
     fails toward the durable plan, never toward pinning."""
     from parallel_mapreduce_spark.sources import corpus_cut, load_table, table_bytes
+    from parallel_mapreduce_spark.sources import tables
 
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_CKPT_MAX_BYTES", raising=False)
     assert table_bytes("/nonexistent", "documents") == 1 << 62
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # Below the gate (test corpora are KB-MB): LogicalRDD, no checkpoint file.
@@ -408,7 +408,7 @@ def test_corpus_cut_gates_on_table_bytes(spark, sf_dir, monkeypatch):
     # eager, so new files appear under the checkpoint directory.
     import os
 
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_CKPT_MAX_BYTES", "0")
+    monkeypatch.setattr(tables, "LOCAL_CUT_MAX_BYTES", 0)
     from parallel_mapreduce_spark.session import ensure_checkpoint_dir
 
     ensure_checkpoint_dir(spark)
