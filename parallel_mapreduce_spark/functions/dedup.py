@@ -35,15 +35,8 @@ from pyspark.sql.window import Window as W
 from parallel_mapreduce_spark.functions.portable import phash60, phash60_sql
 from parallel_mapreduce_spark.functions.text import tokens
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import (
-    bounded_persist,
-    ensure_checkpoint_dir,
-)
-from parallel_mapreduce_spark.sources import (
-    corpus_cut,
-    load_table,
-    register_views,
-)
+from parallel_mapreduce_spark.session import bounded_persist
+from parallel_mapreduce_spark.sources import cut, load_table, register_views
 
 JACCARD_THRESHOLD = 0.5
 N_PERMUTATIONS = 16
@@ -331,17 +324,15 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # copy group costs one counter; only the emit-all-pairs expansion is
     # inherently quadratic (see within_group_pairs' scale note).
     #
-    # Round-14 optimization (guide §5): the collapse/shingle chain feeds
-    # MANY consumers (the index self-join's two sides, the eligible filter,
-    # and members' four join legs), and the joins run broadcast at this
-    # scale, so no ReusedExchange ever dedups the subtrees — the committed
-    # plan re-scanned documents 12x. corpus_cut materializes each shared
-    # frame once; every consumer reads the cut.
-    members = corpus_cut(exact_dup_members(docs), sf_dir)
-    reps = _rep_texts(docs, n)
-    shingled = corpus_cut(
-        reps.select("doc_id", shingles3(tokens("text")).alias("sh")), sf_dir
-    )
+    # The collapse/shingle chain feeds MANY consumers (the index
+    # self-join's two sides, the eligible filter, members' four join legs)
+    # and the joins run broadcast at this scale, so no ReusedExchange
+    # dedups the subtrees — uncut, the plan scanned documents 12x. A lazy
+    # cut materializes each shared frame once for every consumer.
+    dups = exact_dup_members(docs)
+    members = cut(dups, eager=False, sf_dir=sf_dir, table="documents")
+    sh = _rep_texts(docs, n).select("doc_id", shingles3(tokens("text")).alias("sh"))
+    shingled = cut(sh, eager=False, sf_dir=sf_dir, table="documents")
     eligible = shingled.filter(F.size("sh") > 0).select(F.col("doc_id").alias("rep"))
     rep_pairs = jaccard_pairs(shingled)
     cross = expand_rep_pairs(rep_pairs, members, "jaccard")
@@ -387,14 +378,12 @@ def neardup_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = max(spark.sparkContext.defaultParallelism, 8)
-    # Same round-14 corpus_cut as neardup_jaccard_pairs; the freq-cap
-    # census adds a THIRD consumer of the shingle frame, so the cut pays
-    # off even harder here.
-    members = corpus_cut(exact_dup_members(docs), sf_dir)
-    reps = _rep_texts(docs, n)
-    shingled = corpus_cut(
-        reps.select("doc_id", shingles3(tokens("text")).alias("sh")), sf_dir
-    )
+    # Same cuts as neardup_jaccard_pairs (the freq-cap census is a THIRD
+    # consumer of the shingle frame).
+    dups = exact_dup_members(docs)
+    members = cut(dups, eager=False, sf_dir=sf_dir, table="documents")
+    sh = _rep_texts(docs, n).select("doc_id", shingles3(tokens("text")).alias("sh"))
+    shingled = cut(sh, eager=False, sf_dir=sf_dir, table="documents")
     eligible = shingled.filter(F.size("sh") > 0).select(F.col("doc_id").alias("rep"))
     rep_pairs = jaccard_pairs(shingled, freq_cap=SHINGLE_FREQ_CAP)
     cross = expand_rep_pairs(rep_pairs, members, "jaccard")
@@ -592,15 +581,14 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = max(spark.sparkContext.defaultParallelism, 8)
-    # Round-14 corpus_cut (guide §5): members feeds four join legs and
-    # rep_sigs feeds both band-join sides plus the eligible filter; the
-    # broadcast joins at this scale leave no exchange to reuse, so without
-    # the cut each consumer re-ran the scan -> digest -> minhash chain
-    # (measured 1.67 -> 1.50s at sf0.1, interleaved A/B, equality pinned;
-    # cross-session comparisons of this query swing +-30% and first read
-    # as a regression — probes/ab_neardup_cut.py is the methodology).
-    members = corpus_cut(exact_dup_members(docs), sf_dir)
-    rep_sigs = corpus_cut(_minhash_of(_rep_texts(docs, n)), sf_dir)
+    # Lazy cuts, as in neardup_jaccard_pairs: members feeds four join
+    # legs and rep_sigs both band-join sides plus the eligible filter
+    # (measured 1.67 -> 1.50s at sf0.1, interleaved same-session A/B —
+    # cross-session comparisons of this query swing +-30%).
+    dups = exact_dup_members(docs)
+    members = cut(dups, eager=False, sf_dir=sf_dir, table="documents")
+    sigs = _minhash_of(_rep_texts(docs, n))
+    rep_sigs = cut(sigs, eager=False, sf_dir=sf_dir, table="documents")
     bands = _lsh_bands(rep_sigs)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -1111,9 +1099,10 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # label among itself and its neighbors; fixpoint = components. Each round is
 # one shuffle on doc_id; rounds needed = graph diameter (near-dup clusters
 # are tiny and dense, so a handful). The driver loop only orchestrates —
-# all data stays distributed; reliable checkpoint() every CC_CHECK_EVERY
-# rounds truncates the growing lineage (round N doesn't replay rounds
-# 1..N-1) and survives executor loss, unlike executor-block localCheckpoint.
+# all data stays distributed; a lineage cut every CC_CHECK_EVERY rounds
+# truncates the growing lineage (round N doesn't replay rounds 1..N-1);
+# above the corpus gate the cut is a reliable checkpoint, which also
+# survives executor loss (sources.cut).
 #
 # Oracle: DuckDB recursive CTE computing min reachable id per node — the
 # same fixpoint, derived declaratively.
@@ -1161,7 +1150,7 @@ _CLUSTER_PAIRS_SQL = f"""
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components(pairs)
+    return connected_components(pairs, sf_dir=sf_dir, table="documents")
 
 
 CC_MAX_ROUNDS = 64  # safety valve, NOT a truncation: exceeding it raises
@@ -1173,16 +1162,17 @@ CC_MAX_ROUNDS = 64  # safety valve, NOT a truncation: exceeding it raises
 CC_CHECK_EVERY = 3
 
 
-def connected_components(pairs: DataFrame) -> DataFrame:
+def connected_components(pairs: DataFrame, *, sf_dir: str, table: str) -> DataFrame:
     """(doc_id, cluster_id) for every node in the (doc_a, doc_b) pair graph;
     cluster_id = min doc_id reachable. Distributed min-label propagation —
-    see the block comment above for the scale argument.
+    see the block comment above for the scale argument. ``table``: the
+    source table in ``sf_dir`` the pairs derive from (sizes the cuts).
 
     Fault tolerance / driver economy: every CC_CHECK_EVERY rounds the label
-    frame is reliably ``checkpoint()``-ed (durable storage, survives executor
-    loss — localCheckpoint would not) and ONE convergence action runs — a
-    max() over a change flag the final propagation round computes inline, so
-    the test is a scan of the just-checkpointed frame, not a second join.
+    frame is cut eagerly (above the corpus gate a reliable checkpoint that
+    survives executor loss) and ONE convergence action runs — a max() over
+    a change flag the final propagation round computes inline, so the test
+    is a scan of the just-cut frame, not a second join.
     Driver round-trips and lineage both stay O(rounds / CC_CHECK_EVERY);
     propagation is deterministic and monotone, so "last round changed no
     label" is exactly the fixpoint. If CC_MAX_ROUNDS is exhausted while labels are
@@ -1190,18 +1180,13 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     cluster ids (a truncated result would silently keep/drop the wrong
     documents downstream in pipeline_clean_corpus).
     """
-    spark = pairs.sparkSession
-    ensure_checkpoint_dir(spark)
     edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
     # Materialize the pair graph once: every propagation round reads it, and
     # it is tiny relative to the corpus (near-dup pairs only).
-    edges = edges.checkpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .checkpoint(eager=True)
-    )
+    edges = cut(edges, eager=True, sf_dir=sf_dir, table=table)
+    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
+    labels = nodes.withColumn("label", F.col("doc_id"))
+    labels = cut(labels, eager=True, sf_dir=sf_dir, table=table)
     rounds = 0
     while rounds < CC_MAX_ROUNDS:
         for i in range(CC_CHECK_EVERY):
@@ -1217,14 +1202,14 @@ def connected_components(pairs: DataFrame) -> DataFrame:
             # no label, every later round is a no-op — so fixpoint detection
             # only needs the LAST round's change flag, computed inline here.
             # The convergence test then becomes a scan-and-agg over the frame
-            # this batch checkpoints anyway, replacing the extra
+            # this batch cuts anyway, replacing the extra
             # current-vs-previous join job per batch.
             cols = ["doc_id", new_label.alias("label")]
             if i == CC_CHECK_EVERY - 1:
                 cols.append((new_label != F.col("label")).alias("chg"))
             labels = labels.join(neighbor_min, "doc_id", "left").select(*cols)
             rounds += 1
-        labels = labels.checkpoint(eager=True)
+        labels = cut(labels, eager=True, sf_dir=sf_dir, table=table)
         changed = labels.agg(F.max("chg")).first()[0]
         labels = labels.select("doc_id", "label")
         if not changed:
@@ -2264,7 +2249,7 @@ def substring_run_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence kept) and reassembling the survivors in order."""
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    # Round-14 NEGATIVE result (probes/ab_bigram_substr_cut.py): cutting
+    # Round-14 NEGATIVE result (A/B probe of commit 9004ea3): cutting
     # working (doc_id + raw text, three consumers) measured SLOWER at
     # sf0.1 — 2.41s lazy vs 3.70s cut, interleaved min-of-6, equality
     # asserted. The three re-derivations are cheap fused parquet scans;

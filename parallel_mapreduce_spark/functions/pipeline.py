@@ -39,11 +39,7 @@ from parallel_mapreduce_spark.functions.text import (
     tokens,
 )
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import (
-    corpus_cut,
-    load_table,
-    register_views,
-)
+from parallel_mapreduce_spark.sources import cut, load_table, register_views
 
 PIPELINE_QUALITY_MIN = 0.5
 
@@ -102,10 +98,7 @@ _SHINGLES = (
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept documents (doc_id, lang, n_tokens) after the full cleaning chain."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
     register_views(spark, sf_dir)
-    ensure_checkpoint_dir(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     # Stage 0: tokenize once; every later stage reuses the array column.
@@ -121,26 +114,18 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_e = q.groupBy(
         F.md5("text").alias("_k"), F.length("text").alias("_l")
     ).agg(F.min("doc_id").alias("doc_id"))
-    # Survivors feed TWO consumers — the shingle index and the final
-    # keep-one join — and the clustering loop's edge checkpoint would
-    # otherwise re-derive the gate+dedup chain a third time. One
-    # materialization serves all three (measured 4.2s -> 2.6s warm at
-    # sf0.1 when this landed as a reliable checkpoint). Round-13 made it
-    # a localCheckpoint (no parquet round-trip of the text column);
-    # round 14 SIZE-GATES that choice via corpus_cut (verdict item): the
-    # survivors frame carries corpus-scale text, and pinning it to
-    # executor storage at 100 TB is memory pressure plus a fault cliff,
-    # so above the gate the cut goes back through the reliable
-    # checkpoint directory. The RECOVERY point for the iterative phase
-    # stays the per-round checkpoints inside connected_components either
-    # way (executor loss there re-derives survivors once below the gate,
-    # re-reads them above it; it never kills the fixpoint's progress).
-    s = corpus_cut(q.join(keep_e.select("doc_id"), "doc_id"), sf_dir)
+    # Survivors feed the shingle index, the final keep-one join and (via
+    # the edge cut) the clustering loop: one cut serves all three
+    # (measured 4.2s -> 2.6s warm at sf0.1). Lazy: an eager cut measured
+    # no faster (sf0.1, 4 vCPUs, 8 interleaved pairs: medians 4.07s eager
+    # vs 4.04s lazy) and costs one more job.
+    s = q.join(keep_e.select("doc_id"), "doc_id")
+    s = cut(s, eager=False, sf_dir=sf_dir, table="documents")
     # Stage 3: near-dup clustering over survivors; keep cluster representatives.
     shingled = s.select("doc_id", shingles3(F.col("toks")).alias("sh"))
     pairs = jaccard_pairs(shingled).select("doc_a", "doc_b")
     dropped = (
-        connected_components(pairs)
+        connected_components(pairs, sf_dir=sf_dir, table="documents")
         .filter(F.col("cluster_id") != F.col("doc_id"))
         .select("doc_id")
     )

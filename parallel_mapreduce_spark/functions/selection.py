@@ -29,7 +29,7 @@ Spark-first shape and why it scales:
   depends on pick i — Gonzalez is sequential in k by definition);
 - the corpus frame is persisted once; per-pick lineage is rebuilt from a
   LITERAL center array, so plans stay flat (no 5^k lineage nesting — see
-  the NN-Descent checkpoint note in similarity.py for the failure mode).
+  the NN-Descent lineage-cut note in similarity.py for the failure mode).
 
 Determinism (module convention, registry.py rules): squared-L2 distances
 rounded to 6 dp before min/argmax, ties broken toward the lower vec_id;
@@ -48,28 +48,45 @@ from parallel_mapreduce_spark.functions.similarity import (
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist
 from parallel_mapreduce_spark.sources import load_table, register_views
-from parallel_mapreduce_spark.sources.tables import LOCAL_CUT_MAX_BYTES, table_bytes
+from parallel_mapreduce_spark.sources.tables import cut
 
 KC_K = 12  # selected coreset size (k centers, seed included)
 
 
-def _md_cut(md, sf_dir: str):
-    """Per-pick materialization of the running min-distance frame.
-
-    Round-14 optimization (guide §5, §7.3 "planning time itself can
-    become the bottleneck"): bounded_persist alone does NOT cut the
-    LOGICAL plan — each pick's frame nested the previous one's, so by
-    pick 10 analysis+optimization and the TakeOrdered head had grown
-    from ~0.17s to ~0.8s per pick (measured; the Gonzalez loop is
-    sequential by definition, so plan growth is pure driver-side drag).
-    Below the corpus gate the frame localCheckpoints (plan resets to a
-    LogicalRDD every pick, constant per-pick cost); above it the
-    committed persist stands — corpus-scale blocks stay evictable and
-    recomputable, and a durable checkpoint per pick would write the
-    corpus K times."""
-    if table_bytes(sf_dir, "embeddings") <= LOCAL_CUT_MAX_BYTES:
-        return md.localCheckpoint(eager=False)
-    return bounded_persist(md)
+def _gonzalez(vecs: DataFrame, k: int, sf_dir: str) -> list[tuple[int, int, float]]:
+    """The k-pick Gonzalez trajectory over ``vecs`` (vec_id, e):
+    [(rank, center vec_id, covering radius)]. Seeded at the MINIMUM
+    vec_id, as the oracle is — never assume id 0 exists (a corpus without
+    it crashed the unchecked head()) or is the minimum."""
+    seed = vecs.orderBy("vec_id").select("vec_id", "e").head()
+    if seed is None:
+        raise ValueError("k-center selection: empty embedding corpus")
+    md = vecs.select("vec_id", "e", _dist6_to(seed["e"]).alias("md"))
+    rows: list[tuple[int, int, float]] = []
+    center_id = int(seed["vec_id"])
+    for rank in range(k):
+        # One bounded hop per pick: the argmax row carries BOTH this
+        # rank's covering radius (its md IS max(md)) and the next pick.
+        top = md.orderBy(F.desc("md"), "vec_id").head()
+        rows.append((rank, center_id, float(top["md"])))
+        if rank == k - 1:
+            return rows
+        center_id = int(top["vec_id"])
+        # Per-pick lineage cut (guide §7.3 "planning time itself can
+        # become the bottleneck"): a persist alone does NOT cut the
+        # LOGICAL plan — each pick's frame nested the previous one's, so
+        # by pick 10 analysis+optimization and the TakeOrdered head had
+        # grown from ~0.17s to ~0.8s per pick (measured). Cut, the plan
+        # resets to a scan every pick; lazy, because the next pick's
+        # TakeOrdered is the cut frame's first action.
+        nxt = F.least(F.col("md"), _dist6_to(top["e"])).alias("md")
+        md = cut(
+            md.select("vec_id", "e", nxt),
+            eager=False,
+            sf_dir=sf_dir,
+            table="embeddings",
+        )
+    return rows
 
 
 def _kc_oracle() -> str:
@@ -142,36 +159,7 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", as_double(F.col("embedding")).alias("e")
         )
     )
-    # Seed at the MINIMUM vec_id rather than assuming id 0 exists — a
-    # corpus without vec_id 0 crashed with an opaque TypeError on the
-    # unchecked head() (round-11 advice fix; pipeline_diverse_sample
-    # already seeded this way). No vec_id == 0 fast path: it would
-    # mis-seed any corpus where 0 exists but is not the minimum (the
-    # oracle seeds at MIN(vec_id) unconditionally), and the TakeOrdered
-    # over the persisted narrow frame is milliseconds at any corpus
-    # this query's sequential-k design is sane for.
-    seed = vecs.orderBy("vec_id").select("vec_id", "e").head()
-    if seed is None:
-        raise ValueError("kcenter_coreset_select: empty embedding corpus")
-    md = vecs.select("vec_id", "e", _dist6_to(seed["e"]).alias("md"))
-    rows: list[tuple[int, int, float]] = []
-    center_id = int(seed["vec_id"])
-    for rank in range(KC_K):
-        # One bounded hop per pick: the argmax row carries BOTH this
-        # rank's covering radius (its md IS max(md)) and the next pick.
-        top = md.orderBy(F.desc("md"), "vec_id").head()
-        rows.append((rank, center_id, float(top["md"])))
-        if rank == KC_K - 1:
-            break
-        center_id = int(top["vec_id"])
-        md = _md_cut(
-            md.select(
-                "vec_id",
-                "e",
-                F.least(F.col("md"), _dist6_to(top["e"])).alias("md"),
-            ),
-            sf_dir,
-        )
+    rows = _gonzalez(vecs, KC_K, sf_dir)
     # Everything above ran eagerly, so release the corpus frame's cache
     # before returning: its plan is byte-identical to kmeans_lloyd_2iter's
     # input subplan, and a lingering cache entry would substitute an
@@ -273,24 +261,7 @@ def pipeline_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n_parts, "vec_id")
         .select("vec_id", as_double(F.col("embedding")).alias("e"))
     )
-    seed = vecs.orderBy("vec_id").select("vec_id", "e").head()
-    md = vecs.select("vec_id", "e", _dist6_to(seed["e"]).alias("md"))
-    rows: list[tuple[int, int, float]] = []
-    center_id = int(seed["vec_id"])
-    for rank in range(PDS_K):
-        top = md.orderBy(F.desc("md"), "vec_id").head()
-        rows.append((rank, center_id, float(top["md"])))
-        if rank == PDS_K - 1:
-            break
-        center_id = int(top["vec_id"])
-        md = _md_cut(
-            md.select(
-                "vec_id",
-                "e",
-                F.least(F.col("md"), _dist6_to(top["e"])).alias("md"),
-            ),
-            sf_dir,
-        )
+    rows = _gonzalez(vecs, PDS_K, sf_dir)
     vecs.unpersist()
     picks = spark.createDataFrame(
         rows, "sel_rank long, doc_id long, radius double"

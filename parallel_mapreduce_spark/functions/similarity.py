@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist
-from parallel_mapreduce_spark.sources import load_table, register_views, table_bytes
+from parallel_mapreduce_spark.sources import cut, load_table, register_views, table_bytes
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -3629,17 +3629,14 @@ def _knn_rounds(
     per node (a node whose seed buckets hold fewer than K candidates
     starts under-K; one neighbor-of-neighbor round restores full degree).
 
-    Each round is CHECKPOINTED (reliable, like connected components in
-    dedup.py): round t's plan references round t-1 five times (two
+    Each round is CUT (sources.cut, sized by `embeddings`, like connected
+    components in dedup.py): round t's plan references round t-1 five times (two
     undirected legs, two self-join sides, the keep-current union), so
     without lineage truncation the logical plan grows ~5^t and Catalyst
     analysis time — not execution — was measured dominating the query
     (iter-1 window: 28.7 s analyzing vs 1.3 s running; a persist bounds
     recompute but not plan growth, because the optimizer still walks the
     full lineage under the cache node)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     if vecs is None:
         vecs = _knn_vecs(spark, sf_dir)
     if buckets is None:
@@ -3662,7 +3659,8 @@ def _knn_rounds(
         .repartition(n_parts, "node", "nbr")
         .dropDuplicates(["node", "nbr"])
     )
-    rounds = [_knn_topk(_knn_score(init, vecs)).checkpoint(eager=True)]
+    b0 = _knn_topk(_knn_score(init, vecs))
+    rounds = [cut(b0, eager=True, sf_dir=sf_dir, table="embeddings")]
     for it in range(KNN_ITERS):
         b = rounds[-1]
         und = (
@@ -3691,9 +3689,9 @@ def _knn_rounds(
         )
         nxt = _knn_topk(_knn_score(cand, vecs))
         # The LAST round is consumed once (final output / one recall leg),
-        # so its plan never nests — skip the eager checkpoint job for it.
+        # so its plan never nests — skip the eager cut's job for it.
         if it < KNN_ITERS - 1:
-            nxt = nxt.checkpoint(eager=True)
+            nxt = cut(nxt, eager=True, sf_dir=sf_dir, table="embeddings")
         rounds.append(nxt)
     return rounds
 
@@ -4746,9 +4744,6 @@ def _knn_ingest_ctx(spark: SparkSession, sf_dir: str) -> dict:
     fixture's base index is a second index VERSION over the same corpus,
     built once and scanned by both ingest queries instead of rebuilt per
     query), and the symmetrized base adjacency."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     allv = _knn_vecs(spark, sf_dir)
     is_batch = F.col("vec_id") % KNN_BATCH_MOD == KNN_BATCH_RES
     d = _knn_index(spark, sf_dir, variant="ingest_base")
@@ -5635,9 +5630,6 @@ def _gs_visited(
     MANY batches against one static index (the streaming drain) build
     the undirected adjacency and the capped entry-candidate frame once
     and reuse them across batches (the stream-static hoist)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     if beam is None:
         beam = GS_BEAM
     if vecs is None:
@@ -5727,9 +5719,9 @@ def _gs_traverse(
     top-``beam`` frontier, one-hop expand through ``und``, score only
     NEW pairs (the anti-join; the oracle instead rescores and
     set-UNIONs — equivalent because cos6 is a pure function of the
-    pair), checkpoint per hop (round t references round t-1 three times
-    — the _knn_rounds 5^t lineage lesson at 3^t; the visited frame is
-    query-bounded, so the write is tiny). ``exclude_self`` drops
+    pair), eager lineage cut per hop (round t references round t-1 three
+    times — the _knn_rounds 5^t lineage lesson at 3^t; the visited frame
+    is query-bounded, so sources.cut keeps it local at any corpus size). ``exclude_self`` drops
     b == node expansions; OOV queries keep them because their id space
     is disjoint from the corpus's and a numeric collision is not a
     self-pair. ``beam_by`` adds a partition column to the FRONTIER
@@ -5740,13 +5732,7 @@ def _gs_traverse(
     ``parts`` sizes the exchanges of the query-bounded frames (default:
     full parallelism — callers that know their query count pass
     _gs_parts); ``bcast_und`` broadcasts the adjacency into the hop
-    join (small-corpus serving; guide §3.1). Round-13 optimization: the
-    per-hop materialization is a localCheckpoint — it truncates the 3^t
-    lineage exactly like the reliable checkpoint did, without writing
-    and re-reading parquet per hop (guide §5: localCheckpoint is the
-    cheaper lineage cut when fault tolerance of the intermediate is not
-    critical — a serving request is re-runnable, unlike the build, which
-    keeps its durable checkpoints).
+    join (small-corpus serving; guide §3.1).
 
     Round-14 optimization (guide §2.4 "remove shuffles outright"): on the
     broadcast path the hop now pays ONE exchange (the frontier window's
@@ -5764,7 +5750,7 @@ def _gs_traverse(
     AQE-funnel hazard _knn_topk's explicit repartition exists to avoid.)"""
     spark = entry_scored.sparkSession
     n_parts = parts or max(spark.sparkContext.defaultParallelism, 8)
-    visited = entry_scored.localCheckpoint(eager=True)
+    visited = cut(entry_scored, eager=True)
     for _ in range(GS_ROUNDS):
         if beam_by is None:
             front = _knn_topk(visited, k=beam, parts=n_parts)
@@ -5793,7 +5779,7 @@ def _gs_traverse(
             ["node", "nbr"],
             "left_anti",
         )
-        visited = visited.unionAll(score(expand)).localCheckpoint(eager=True)
+        visited = cut(visited.unionAll(score(expand)), eager=True)
     return visited
 
 
@@ -6611,9 +6597,6 @@ def _gs_score_oov(
 def _gs_oov_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, nbr, cos6): the OOV beam search's scored set after
     GS_ROUNDS hops (node = held-out q_id, disjoint id space)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     graph = _knn_graph_snap(spark, sf_dir)
     small = _gs_small(sf_dir)
@@ -7665,9 +7648,6 @@ def _gs_sharded_visited(
     IS the committed unsharded serving path."""
     if s_count == 1:
         return _gs_visited(spark, sf_dir)
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     d = _knn_index(spark, sf_dir, variant=f"sharded{s_count}")
     graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
@@ -7847,9 +7827,6 @@ def _gs_routed_visited(
     in-shard, so a single per-query beam IS a home-shard beam. The cheap
     end of the sharded-serving cost spectrum: ~1/S the entry candidates
     and 1/S the beam budget of the fan-out path."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     d = _knn_index(spark, sf_dir, variant=f"sharded{s_count}")
     graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
@@ -8029,9 +8006,6 @@ def _gs_cell_routed_visited(
     cells because every edge is in-cell. ONE per-query beam regardless
     of ``p`` (the legs differ only in entry coverage, so the recall-vs-P
     table isolates the routing decision from the beam budget)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     d = _knn_index(spark, sf_dir, variant="cellrouted")
     graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
@@ -8416,7 +8390,7 @@ def knn_graph_semantic_clusters(
         )
         .distinct()
     )
-    return connected_components(pairs)
+    return connected_components(pairs, sf_dir=sf_dir, table="embeddings")
 
 
 @query(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.functions.portable import phash60, phash60_sql
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import cut, load_table, register_views
 
 # Shared stopword/marker vocabulary (tiny on purpose: the oracle must use the
 # exact same lists, inlined into the SQL strings below).
@@ -2318,17 +2318,13 @@ def bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = token_df(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
     # Vocabulary-bounded; MATERIALIZED so the corpus tokenize-and-count
     # runs once, not once per round-consumer (3 pair censuses + 3 stat
-    # rows). Round-13 optimization (guide §5): localCheckpoint here and
+    # rows). Round-13 optimization (guide §5): an eager cut here and
     # after each merge — the per-round lineage cut keeps every round's
     # census a one-scan job over the vocabulary-bounded frame instead of
     # a re-derivation chain the engine must dedup via ReusedExchange
     # (measured at sf0.1: 2.7-4.1s -> 1.6-2.2s, identical rows).
-    syms = wc.select(
-        "cnt",
-        F.expr(
-            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-        ).alias("s"),
-    ).localCheckpoint(eager=True)
+    chars = "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+    syms = cut(wc.select("cnt", F.expr(chars).alias("s")), eager=True)
     out = None
     for r in range(1, BPE_ROUNDS + 1):
         pairs = syms.select(
@@ -2347,11 +2343,8 @@ def bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("pair_count"), "a", "b")
             .limit(1)
         )
-        syms = (
-            syms.crossJoin(F.broadcast(top))
-            .select("cnt", F.expr(_BPE_MERGE_EXPR).alias("s"))
-            .localCheckpoint(eager=True)
-        )
+        merged = syms.crossJoin(F.broadcast(top))
+        syms = cut(merged.select("cnt", F.expr(_BPE_MERGE_EXPR).alias("s")), eager=True)
         stat = syms.agg(
             F.sum(F.col("cnt") * F.size("s")).cast("long").alias("symbols_after")
         )

@@ -1504,8 +1504,8 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    # Round-14 NEGATIVE result (probes/ab_bigram_substr_cut.py +
-    # ab_bigram_members_only.py): corpus_cut on members and/or the
+    # Round-14 NEGATIVE result (A/B probes of commit 9004ea3): a lazy
+    # lineage cut (sources.cut) on members and/or the
     # tokenized reps frame measured SLOWER at sf0.1 (old 1.71s vs
     # members-only 1.80s vs both 1.98s, interleaved min-of-6, equality
     # asserted) — unlike the near-dup family the shared chains here are

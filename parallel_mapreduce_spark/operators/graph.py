@@ -32,7 +32,7 @@ both dimension sides broadcast); the iteration itself runs on the
 aggregated |V|=25, |E|<=625 graph with the rank side broadcast — zero
 shuffles per round. For a billion-vertex graph the same plan shape
 holds with the rank side shuffled instead of broadcast and a
-`localCheckpoint` per round to truncate lineage, as neardup_clusters
+corpus-sized lineage cut per round (sources.cut), as neardup_clusters
 does; overflow headroom: rank*w stays under 2^63 while
 max_rank * max_edge_weight < 9.2e18 (document-level graphs should
 pre-normalize weights to per-src shares in micro-units first).
@@ -45,7 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources.tables import load_table, register_views
+from parallel_mapreduce_spark.session import bounded_persist
+from parallel_mapreduce_spark.sources.tables import cut, load_table, register_views
 
 PR_ITERS = 3
 PR_UNIT = 1_000_000  # one rank point, in micro-units
@@ -120,8 +121,10 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle is lineitem |><| orders on the order key + the 625-row-max
     # edge aggregation. Persisted because the tiny aggregated graph feeds
     # every iteration (and the dangling check) — without it each of the
-    # 3*2+1 consumers would re-run the corpus join.
-    edges = (
+    # 3*2+1 consumers would re-run the corpus join. The returned plan
+    # reads the cache lazily, so it has no owner to unpersist it: the
+    # session ring bounds its residency.
+    edges = bounded_persist(
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -130,7 +133,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("dst"),
         )
         .agg(F.count("*").alias("w"))
-        .persist()
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     n_nodes = nation.count()  # 25-row dimension; bounded driver count
@@ -162,21 +164,16 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0),
             ),
         )
-        # Round-14 optimization (guide §5 / §3.3 "materialising an
-        # intermediate truncates the plan"): base is referenced TWICE per
-        # iteration (contribution join + rank update), and the lazy form
-        # compounded into a 190-Exchange / 56-SortMergeJoin final plan
-        # whose tiny 25-row joins were planned from corpus-scale
-        # estimates (the round-13 broadcast-hint attempt broke
-        # ReusedExchange dedup and measured SLOWER — the fix is to
-        # materialize, not to hint). The frame is |V|-bounded by
-        # construction (the aggregated nation graph), so the per-round
-        # cut is a one-task job; with real runtime stats AQE picks the
-        # broadcast itself. Measured 2.83 -> 1.68s at sf0.1 interleaved
-        # same-session A/B, bit-identical output (exact integer ranks).
-        # A billion-vertex graph keeps rank frames distributed (module
-        # docstring) — there the cut would be a reliable checkpoint.
-        base = base.localCheckpoint(eager=True)
+        # base is referenced TWICE per iteration (contribution join + rank
+        # update); uncut, the loop compounded into a 190-Exchange /
+        # 56-SortMergeJoin final plan whose 25-row joins were planned from
+        # corpus-scale estimates (a broadcast hint broke ReusedExchange
+        # dedup and measured SLOWER). The frame is |V|-bounded by
+        # construction, so the eager cut is a one-task job and AQE then
+        # broadcasts from real stats: 2.83 -> 1.68s at sf0.1 interleaved
+        # A/B, bit-identical ranks. A billion-vertex graph would name its
+        # source table instead (module docstring).
+        base = cut(base, eager=True)
         contribs = (
             base.join(edges, base.nk == edges.src)
             .groupBy("dst")
@@ -219,9 +216,9 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # convergence pattern) and raises if the budget is not enough.
 #
 # Scale: each round is one degree aggregate + two vertex-keyed semi
-# joins — the CC label-propagation shuffle shape; rounds are
-# checkpointed (round t references round t-1 three times -> the 5^t
-# NN-Descent plan-growth lesson applies at 3^t).
+# joins — the CC label-propagation shuffle shape; every round is cut
+# eagerly, sized by `documents` (round t references round t-1 three
+# times -> the 5^t NN-Descent plan-growth lesson applies at 3^t).
 # --------------------------------------------------------------------------
 KCORE_KS = (2, 3)
 KCORE_ROUNDS = 8
@@ -267,9 +264,6 @@ def kcore_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.functions.dedup import (
         minhash_lsh_candidates,
     )
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     pairs = minhash_lsh_candidates(spark, sf_dir)
     und = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -278,7 +272,7 @@ def kcore_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for k in KCORE_KS:
-        e = und.checkpoint(eager=True)
+        e = cut(und, eager=True, sf_dir=sf_dir, table="documents")
         n_prev = e.count()
         # KCORE_ROUNDS + 1: detection needs a trailing NO-OP round (the
         # loop only sees convergence when a peel leaves the edge count
@@ -298,8 +292,8 @@ def kcore_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                 e.join(keep, "u", "left_semi")
                 .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
                 .select("u", "v")
-                .checkpoint(eager=True)
             )
+            e = cut(e, eager=True, sf_dir=sf_dir, table="documents")
             n = e.count()
             if n == n_prev:
                 break

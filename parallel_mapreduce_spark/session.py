@@ -26,6 +26,27 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
 
 
+def _cgroup_memory_max() -> int | None:
+    """The cgroup memory limit in bytes (v2, else v1); None if unlimited."""
+    for path in ("memory.max", "memory/memory.limit_in_bytes"):
+        try:
+            with open(f"/sys/fs/cgroup/{path}") as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        return int(raw) if raw.isdigit() else None
+    return None
+
+
+def default_driver_memory() -> str:
+    """Half the memory this process may use (its cgroup limit, capped by
+    physical memory — a v1 "unlimited" limit reads 2^63): the JVM's
+    resident set runs well past its heap, so a heap sized to all of
+    memory gets the process OOM-killed on a shared machine."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_cgroup_memory_max() or total, total) >> 21}m"
+
+
 def get_spark(
     app_name: str = "parallel-mapreduce-spark",
     cpus: int | None = None,
@@ -51,7 +72,10 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
@@ -93,29 +117,6 @@ def apply_runtime_conf(spark: SparkSession) -> None:
     # outright rather than falling back.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     ensure_package_on_workers(spark.sparkContext)
-
-
-_CKPT_DIRS: set[str] = set()
-
-
-def ensure_checkpoint_dir(spark: SparkSession) -> None:
-    """Set a reliable checkpoint dir (once per SparkContext) for iterative
-    operators. Unlike localCheckpoint — whose blocks live on executors and
-    die with them — ``df.checkpoint()`` writes to this directory, so an
-    executor loss mid-iteration recovers by re-reading the checkpoint
-    instead of killing the query. Locally this is a temp dir; on a real
-    cluster point SPARK_GRAFT_CHECKPOINT_DIR at durable storage (HDFS/S3).
-    """
-    sc = spark.sparkContext
-    if sc.applicationId in _CKPT_DIRS:
-        return
-    path = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not path:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="pmr_spark_ckpt_")
-    sc.setCheckpointDir(path)
-    _CKPT_DIRS.add(sc.applicationId)
 
 
 _SHIPPED: set[str] = set()
@@ -199,27 +200,18 @@ def state_sized_shuffle(spark: SparkSession, n: int = 8):
     return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
-# Persisted-frame residency bound (round-9 review finding): anonymous
-# .persist() frames created inside query plans (PQ codebooks, SemDeDup's
-# tagged seeds / assigned frame) have no owner to unpersist them, so a
-# long session (bench best-of-N, the 317-query driver run, the pytest
-# suite) accumulates cached blocks forever. This ring gives them the
-# PENDING_UNCACHE treatment: appending the newest evicts (unpersists)
-# the oldest beyond the cap. Eviction is ALWAYS safe — an unpersisted
-# plan falls back to ordinary recompute, it never breaks — and by the
-# time a frame is _PERSIST_RING_CAP persists old, the query that created
-# it has been materialized or abandoned, so eviction costs nothing. The
-# cap comfortably exceeds the largest single composition's persist count
-# (ann_recall_matrix_clustered creates ~8 before materializing).
+# Persisted-frame residency bound: frames cached inside query plans (PQ
+# codebooks, SemDeDup's seeds, PageRank's edges) have no owner to
+# unpersist them, so a long session would accumulate cached blocks
+# forever. Appending the newest evicts (unpersists) the oldest beyond the
+# cap. Eviction is ALWAYS safe — an unpersisted plan falls back to
+# recompute — and the cap exceeds the largest single composition's
+# persist count (ann_recall_matrix_clustered creates ~8).
 _PERSIST_RING: list = []
 _PERSIST_RING_CAP = 16
 _PERSIST_RING_LOCK = threading.Lock()
-# Evictions since process start — a composition that persists more than
-# _PERSIST_RING_CAP frames before materializing would silently lose its
-# speedups to recompute fallback; this counter makes a cap overrun
-# observable (tests/test_plans.py pins the eviction semantics, and any
-# future composition can assert the counter didn't move across its own
-# build). Read via persist_evictions().
+# Evictions since process start: makes a cap overrun (a composition
+# silently losing its caches to recompute) observable.
 _PERSIST_EVICTIONS = 0
 
 

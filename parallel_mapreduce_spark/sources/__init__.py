@@ -1,6 +1,6 @@
 from parallel_mapreduce_spark.sources.tables import (  # noqa: F401
     TABLES,
-    corpus_cut,
+    cut,
     load_table,
     read_csv,
     read_json,
@@ -13,7 +13,7 @@ from parallel_mapreduce_spark.sources.tables import (  # noqa: F401
 
 __all__ = [
     "TABLES",
-    "corpus_cut",
+    "cut",
     "table_bytes",
     "load_table",
     "read_csv",

@@ -14,6 +14,8 @@ that is hand-scheduled here.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -125,9 +127,9 @@ def read_json(
     return reader.json(paths)
 
 
-# Gate for executor-pinned (localCheckpoint) materialization of
-# corpus-derived intermediates, in ON-DISK source-table bytes. Below it a
-# multi-consumer frame is cheap to pin on executors; above it the frame is
+# Gate for executor-pinned (localCheckpoint) lineage cuts of
+# corpus-derived frames, in ON-DISK source-table bytes (see cut()). Below
+# it a cut frame is cheap to pin on executors; above it the frame is
 # corpus-scale, where executor-pinned blocks are storage pressure plus a
 # fault cliff (a lost executor kills the job instead of recomputing), so
 # the cut goes through the reliable checkpoint directory instead. NOTE the
@@ -140,8 +142,6 @@ def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk bytes of one source table (single file or directory of part
     files). Unknown (non-local path, listing error) => huge, so size gates
     fail toward the durable / shuffle plan, never toward pinning."""
-    import os
-
     p = f"{sf_dir.rstrip('/')}/{name}.parquet"
     try:
         if os.path.isdir(p):
@@ -155,29 +155,38 @@ def table_bytes(sf_dir: str, name: str) -> int:
         return 1 << 62
 
 
-def corpus_cut(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFrame:
-    """Materialize a corpus-derived frame ONCE for its multiple consumers
-    (guide §5: cache/cut when a frame is reused and recompute is expensive)
-    with the lineage-cut flavor picked by corpus size:
+# applicationIds whose reliable checkpoint directory is already set.
+_CKPT_APPS: set[str] = set()
 
-    - below the gate: ``localCheckpoint`` — no parquet round-trip, blocks
-      pinned on executors (tiny here by the gate's definition; a lost
-      executor merely fails a re-runnable query);
-    - above it: reliable ``checkpoint`` — one write+read instead of N
-      recomputes of a corpus-scale chain, recoverable on executor loss,
-      and no corpus-scale block pinned in executor storage.
 
-    Values are identical either way; only materialization strategy moves.
+def cut(
+    df: DataFrame, *, eager: bool, sf_dir: str | None = None, table: str | None = None
+) -> DataFrame:
+    """Cut ``df``'s lineage — the engine's one rule for materializing a
+    frame that several consumers read or a loop feeds back into itself
+    (``session.bounded_persist`` caches but keeps lineage). The caller
+    states a property of the data, never a mechanism:
+
+    - ``table=None``: bounded by construction (a |V|-row graph, a
+      vocabulary, a query batch) -> ``localCheckpoint(eager)``;
+    - ``table``: the source table in ``sf_dir`` the frame scales with ->
+      ``localCheckpoint(eager)`` up to ``LOCAL_CUT_MAX_BYTES`` on disk;
+      larger or unknown -> reliable ``checkpoint(eager=True)``, into
+      ``SPARK_GRAFT_CHECKPOINT_DIR`` (durable storage on a cluster) or
+      else the atexit-removed ``sink_dir`` root, set once per context.
+
+    Lazy local cuts share ONE RDD whose blocks fill inside the first
+    action (no extra job); eager ones run now, so a loop's next plan
+    starts from a materialized frame. Values never depend on the branch.
     """
-    if table_bytes(sf_dir, table) <= LOCAL_CUT_MAX_BYTES:
-        # Lazy: consumers share ONE RDD, so upstream shuffle stages dedup
-        # by shuffle id inside the first action (no per-consumer replans)
-        # and the blocks cache for everything after — without the eager
-        # form's extra sequential materialization job per cut.
-        return df.localCheckpoint(eager=False)
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(df.sparkSession)
+    if table is None or table_bytes(sf_dir, table) <= LOCAL_CUT_MAX_BYTES:
+        return df.localCheckpoint(eager=eager)
+    sc = df.sparkSession.sparkContext
+    if sc.applicationId not in _CKPT_APPS:
+        sc.setCheckpointDir(
+            os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or sink_dir("checkpoints")
+        )
+        _CKPT_APPS.add(sc.applicationId)
     return df.checkpoint(eager=True)
 
 
@@ -189,10 +198,9 @@ def sink_dir(kind: str) -> str:
     queries (csv/json/partitioned/bucketed/stream snapshots).
 
     One mkdtemp root per process — no cross-process collisions — with one
-    subdirectory per sink kind REUSED across invocations: every writer here
-    runs in overwrite mode, so bench's adaptive best-of-N overwrites one
-    copy in place instead of accumulating dozens of full table copies. The
-    whole root is removed at interpreter exit."""
+    subdirectory per sink kind REUSED across invocations (every writer
+    here overwrites in place). The whole root is removed at interpreter
+    exit."""
     global _SINK_ROOT
     if _SINK_ROOT is None:
         import atexit
@@ -201,8 +209,6 @@ def sink_dir(kind: str) -> str:
 
         _SINK_ROOT = tempfile.mkdtemp(prefix="pmr_sinks_")
         atexit.register(shutil.rmtree, _SINK_ROOT, ignore_errors=True)
-    import os
-
     path = os.path.join(_SINK_ROOT, kind)
     os.makedirs(path, exist_ok=True)
     return path

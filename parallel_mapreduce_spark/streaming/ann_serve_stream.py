@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from pyspark.sql import functions as F
 from parallel_mapreduce_spark.functions import similarity as sim
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.sources.tables import sink_dir
 
 _RUN_SEQ = itertools.count(1)
 
@@ -155,16 +155,14 @@ def stream_ann_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving query answered per micro-batch from the index snapshot.
     Equals the batch ann_graph_search_topk (same oracle): beams are per
     query, so batch-at-a-time serving is exact, not approximate."""
-    out_dir = tempfile.mkdtemp(
-        prefix=f"pmr_ann_serve_{next(_RUN_SEQ)}_"
-    )
+    out_dir = sink_dir(f"ann_serve_{next(_RUN_SEQ)}")
     ann_serve_stream_run(spark, sf_dir, out_dir)
     batches = sorted(
         os.path.join(out_dir, d)
         for d in os.listdir(out_dir)
         if d.startswith("batch-")
     )
-    # The scratch sink stays on disk for the session (KNN_EVAL_N * KNN_K
-    # rows of parquet — the returned plan scans it lazily, exactly like
-    # the memory-sink streaming queries read their sink table).
+    # The scratch sink stays on disk until the process exits (KNN_EVAL_N *
+    # KNN_K rows of parquet — the returned plan scans it lazily, exactly
+    # like the memory-sink streaming queries read their sink table).
     return spark.read.parquet(*batches)

@@ -138,14 +138,14 @@ def test_binding_freq_cap_only_removes_pairs_never_raises_scores(spark, sf_dir):
         assert score <= exact[pair] + 1e-9
 
 
-def test_connected_components_empty_graph(spark):
+def test_connected_components_empty_graph(spark, sf_dir):
     from parallel_mapreduce_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert connected_components(pairs).count() == 0
+    assert connected_components(pairs, sf_dir=sf_dir, table="documents").count() == 0
 
 
-def test_connected_components_raises_on_round_cap(spark, monkeypatch):
+def test_connected_components_raises_on_round_cap(spark, sf_dir, monkeypatch):
     import parallel_mapreduce_spark.functions.dedup as D
     import pytest
 
@@ -157,17 +157,18 @@ def test_connected_components_raises_on_round_cap(spark, monkeypatch):
     )
     monkeypatch.setattr(D, "CC_MAX_ROUNDS", 2)
     with pytest.raises(RuntimeError, match="still changing"):
-        D.connected_components(pairs)
+        D.connected_components(pairs, sf_dir=sf_dir, table="documents")
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, sf_dir):
     from parallel_mapreduce_spark.functions.dedup import connected_components
 
     # Same path graph under the real cap: every node must reach label 0.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "doc_a long, doc_b long"
     )
-    labels = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
+    cc = connected_components(pairs, sf_dir=sf_dir, table="documents")
+    labels = {r.doc_id: r.cluster_id for r in cc.collect()}
     assert labels == {i: 0 for i in range(12)}
 
 

@@ -105,9 +105,9 @@ GLOBAL_WINDOW_WHITELIST = {
     "monthly_revenue_growth",
     # pagerank_trade_graph's dangling-mass global window (25-row bounded,
     # justified in operators/graph.py) still runs, but since the round-14
-    # per-iteration localCheckpoint it executes inside the eager cut during
-    # DataFrame construction, so the RETURNED plan no longer prints it —
-    # the audit sees only the post-cut LogicalRDD.
+    # per-iteration lineage cut (sources.cut, eager) it executes inside
+    # that cut during DataFrame construction, so the RETURNED plan no
+    # longer prints it — the audit sees only the post-cut LogicalRDD.
     "price_weighted_median_by_flag",
     "semdedup_cluster_report",
     "sorted_neighborhood_multipass_pairs",
@@ -252,8 +252,8 @@ HEADLINE_EXCHANGE_CEILING = {
     # the vocab-bounded symbol frame per round x (pair census, merge,
     # stats). Every exchange beyond the one corpus pass is singleton-row
     # or vocab/|V|-bounded.
-    # These two pins carry slack: both plans contain a .persist() whose
-    # materialization STATE changes how AQE prints the cached subtree
+    # These two pins carry slack: both plans contain a cached or cut
+    # frame whose materialization STATE changes how AQE prints the subtree
     # (cold: full edge-derivation/symbol-frame subtrees re-printed per
     # consumer -> 264 / 100; after a prior run materialized the cache the
     # printout differs by a few dozen occurrences). The pin exists to
@@ -293,7 +293,7 @@ HEADLINE_EXCHANGE_CEILING = {
     # + the Q x 2L fusion — measured 19.
     "hybrid_rrf_retrieval": 30,
     # round 10 session 3: the returned plan is the LAST NN-Descent round
-    # only (earlier rounds are eager reliable checkpoints, executed
+    # only (earlier rounds are eager lineage cuts, executed
     # during fn() and read back as scans): undirected-view dedup +
     # neighbor-of-neighbor self-join + candidate dedup + two
     # round 12: the query now IS the build->serve split — first touch
@@ -307,15 +307,15 @@ HEADLINE_EXCHANGE_CEILING = {
     # by construction. The pin still catches a refactor that turns the
     # result into a lazy corpus-scale plan.
     "kcenter_coreset_select": 0,
-    # round 11: beam search runs eagerly (entry + hops are checkpointed
-    # per round); the returned plan is the final top-k window over the
-    # visited-set checkpoint scan — measured 1.
+    # round 11: beam search runs eagerly (entry + hops are cut per
+    # round); the returned plan is the final top-k window over the
+    # visited-set cut's scan — measured 1.
     "ann_graph_search_topk": 2,
     # round 11: the shared IVF scored-candidate plan (centroid build +
     # assignment + probes) + the broadcast predicate semi-join + the
     # ranking window — measured 21; persisted/cache-state slack.
     "ann_filtered_topk": 30,
-    # round 12: tombstone serving = the traversal's visited-checkpoint
+    # round 12: tombstone serving = the traversal's visited-set cut
     # scan + the broadcast tombstone anti-join + the ranking window (the
     # tombstone frame derivation prints its own small exchanges) —
     # measured 6.

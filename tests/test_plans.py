@@ -850,6 +850,20 @@ def test_pagerank_dimensions_broadcast_no_cartesian(spark, sf_dir):
     assert "pr_micro" in plan
 
 
+def test_pagerank_edge_cache_is_held_by_the_persist_ring(spark, sf_dir):
+    """pagerank_trade_graph's cached edge frame outlives the call (the
+    returned plan reads it lazily), so it must sit in the session's
+    persist ring, whose cap bounds how many such caches a session keeps;
+    a bare persist() left one more cached plan behind per call."""
+    import parallel_mapreduce_spark.session as S
+    from parallel_mapreduce_spark.operators.graph import pagerank_trade_graph
+
+    before = {id(df) for df in S._PERSIST_RING}
+    pagerank_trade_graph(spark, sf_dir)
+    added = [df for df in S._PERSIST_RING if id(df) not in before]
+    assert [df.columns for df in added] == [["src", "dst", "w"]]
+
+
 def test_freq_items_verify_join_is_broadcast(spark, sf_dir):
     """The sketch-proposes/exact-verifies composition in the plan: the
     bounded freqItems candidate row reaches the exact-count filter as a

@@ -389,36 +389,58 @@ def test_python_stream_source_multibatch_and_replay(spark):
     assert list(r.readBetweenOffsets({"i": 0}, off)) == paced
 
 
-def test_corpus_cut_gates_on_table_bytes(spark, sf_dir, monkeypatch):
-    """corpus_cut picks its lineage-cut flavor from on-disk corpus bytes:
-    localCheckpoint (executor-pinned RDD) below the gate, reliable
-    checkpoint above it — and an unknown table reads as huge, so the gate
-    fails toward the durable plan, never toward pinning."""
-    from parallel_mapreduce_spark.sources import corpus_cut, load_table, table_bytes
-    from parallel_mapreduce_spark.sources import tables
+def test_cut_follows_the_size_rule(spark, sf_dir, monkeypatch):
+    """sources.cut picks its branch from what the caller says about the
+    data: a bounded frame is always cut locally; a corpus-derived frame
+    is cut locally while its source table fits under the gate and
+    durably above it, where cut() sets up the checkpoint directory
+    itself; an unknown table reads as huge, so it is cut durably."""
+    import os
+
+    from parallel_mapreduce_spark.sources import cut, load_table, table_bytes, tables
 
     assert table_bytes("/nonexistent", "documents") == 1 << 62
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # Below the gate (test corpora are KB-MB): LogicalRDD, no checkpoint file.
-    small = corpus_cut(docs, sf_dir)
-    assert "LogicalRDD" in small._jdf.queryExecution().optimizedPlan().toString()
-    assert not small.rdd.isCheckpointed()  # local, not reliable
-    assert small.collect() == docs.collect()
-    # Above the gate (forced with a 0-byte ceiling): reliable checkpoint —
-    # eager, so new files appear under the checkpoint directory.
-    import os
+    want = sorted(docs.collect())
+    env_root = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    root = os.path.abspath(env_root or tables.sink_dir("checkpoints"))
 
+    def durable(**kw) -> bool:
+        before = sum(len(fs) for _, _, fs in os.walk(root))
+        assert sorted(cut(docs, **kw).collect()) == want
+        return sum(len(fs) for _, _, fs in os.walk(root)) > before
+
+    corpus = {"eager": False, "sf_dir": sf_dir, "table": "documents"}
+    assert not durable(**corpus)
+    assert durable(eager=False, sf_dir=sf_dir, table="no_such_table")
+    # Gate forced to 0, and no directory set up for this context yet.
     monkeypatch.setattr(tables, "LOCAL_CUT_MAX_BYTES", 0)
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
+    monkeypatch.setattr(tables, "_CKPT_APPS", set())
+    assert durable(**corpus)
+    ckpt = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+    assert ckpt.removeprefix("file:").startswith(root)
+    assert not durable(eager=True)
 
-    ensure_checkpoint_dir(spark)
-    ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-    if ckpt_dir.startswith("file:"):
-        ckpt_dir = ckpt_dir[len("file:"):]
-    before = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
-    big = corpus_cut(docs, sf_dir)
-    after = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
-    assert after > before
-    assert sorted(r.doc_id for r in big.collect()) == sorted(
-        r.doc_id for r in docs.collect()
-    )
+
+def test_durable_cuts_keep_results(spark, sf_dir, monkeypatch):
+    """Forcing every corpus-derived cut through the durable branch (gate
+    at 0) changes how frames are materialized, never what is computed:
+    the iterative fixpoints and NN-Descent return the rows they return
+    under the default gate."""
+    from parallel_mapreduce_spark.functions.dedup import neardup_clusters
+    from parallel_mapreduce_spark.functions.similarity import _knn_rounds
+    from parallel_mapreduce_spark.operators.graph import kcore_neardup_graph
+    from parallel_mapreduce_spark.sources import tables
+
+    def rows():
+        return (
+            sorted(neardup_clusters(spark, sf_dir).collect()),
+            sorted(kcore_neardup_graph(spark, sf_dir).collect()),
+            sorted(_knn_rounds(spark, sf_dir)[-1].collect()),
+        )
+
+    local = rows()
+    monkeypatch.setattr(tables, "LOCAL_CUT_MAX_BYTES", 0)
+    durable = rows()
+    assert durable == local
+    assert all(local)
